@@ -323,6 +323,21 @@ TRENDING_SQL = _trending_sql("ASC")
 TRENDING_REFERENCE_EXACT_SQL = _trending_sql("DESC")
 
 
+def kpi_tables(enriched: DataFrame) -> dict[str, DataFrame]:
+    """The five KPI tables, keyed by their output table names. The daily
+    aggregate is built once: ``genre_top_genres`` ranks that same frame,
+    so persisting the tables in this order caches the ranking over the
+    persisted daily rows."""
+    daily = genre_daily_metrics(enriched)
+    return {
+        "user_kpis": user_kpis(enriched),
+        "genre_daily_metrics": daily,
+        "genre_top_songs": genre_top_songs(enriched),
+        "genre_top_genres": genre_top_genres(enriched, daily=daily),
+        "trending_tracks": trending_tracks(enriched),
+    }
+
+
 # ---------------------------------------------------------------------------
 # trailing moving average + day-over-day delta (rows-frame window surface)
 # ---------------------------------------------------------------------------

@@ -13,6 +13,8 @@ keys, ``create_dynamodb_table.py:20-50``).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -95,38 +97,51 @@ def trending_items(trending: DataFrame, batch_ts: str) -> DataFrame:
     )
 
 
+def items_from_kpis(kpis: Mapping[str, DataFrame], batch_ts: str) -> DataFrame:
+    """All five KPI item families unioned by name into the sparse serving
+    layout (U1 union; missing attributes null, as in a KV table).
+
+    ``kpis`` maps the KPI table names of :func:`kpis.kpi_tables` to their
+    frames. Each family is a projection of its table, so over persisted
+    KPI frames the items cost a scan of the cached rows — no aggregate or
+    window runs again."""
+    frames = [
+        user_items(kpis["user_kpis"], batch_ts),
+        genre_daily_items(kpis["genre_daily_metrics"], batch_ts),
+        top_songs_items(kpis["genre_top_songs"], batch_ts),
+        top_genres_items(kpis["genre_top_genres"], batch_ts),
+        trending_items(kpis["trending_tracks"], batch_ts),
+    ]
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
+
+
 def serving_items(
     enriched: DataFrame,
     batch_ts: str = DEFAULT_BATCH_TS,
     materialize: bool = False,
 ) -> DataFrame:
-    """All five KPI item families unioned by name into the sparse serving
-    layout (U1 union; missing attributes null, as in a KV table).
+    """The serving items computed straight from the enriched frame:
+    :func:`items_from_kpis` over :func:`kpis.kpi_tables` (the daily
+    aggregate is built once and shared by its two consumers).
+
+    Every KPI aggregate and window runs inside this plan, once per action
+    on it. A caller that also writes the KPI tables should persist those
+    frames and shape the items from them with :func:`items_from_kpis`
+    instead, as the batch pipeline does: each KPI is then computed once
+    per run, however many sinks consume the items.
 
     ``materialize`` computes the enriched input once via a lazy
     ``localCheckpoint`` instead of re-running it for each of the five
     branches. Default OFF: enriched is a shuffle-free scan + broadcast
     join, and re-running that pipelined plan per branch measures faster
     than a materialization barrier. Flip it on when the input plan is
-    expensive (shuffles, UDFs) or when callers haven't cached it and fact
-    I/O dominates — or better, cache/persist upstream as the batch
-    pipeline does."""
+    expensive (shuffles, UDFs) and the caller has not cached it."""
     if materialize:
         enriched = enriched.localCheckpoint(eager=False)
-    # The daily aggregate is computed once and shared by its two consumers
-    # rather than rebuilt.
-    daily = K.genre_daily_metrics(enriched)
-    frames = [
-        user_items(K.user_kpis(enriched), batch_ts),
-        genre_daily_items(daily, batch_ts),
-        top_songs_items(K.genre_top_songs(enriched), batch_ts),
-        top_genres_items(K.genre_top_genres(enriched, daily=daily), batch_ts),
-        trending_items(K.trending_tracks(enriched), batch_ts),
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+    return items_from_kpis(K.kpi_tables(enriched), batch_ts)
 
 
 # ---------------------------------------------------------------------------

@@ -806,16 +806,21 @@ def _rademacher_planes(bands: int, bits: int, dims: int) -> np.ndarray:
 #: matrix, re-broadcasting it, and re-wrapping a fresh pandas_udf on
 #: every call — 8 LSH-lane entries share the default banding. The
 #: planes are a parameter-keyed CONSTANT (md5-seeded Rademacher), never
-#: data, so caching them cannot stale; the context id in the key drops
-#: entries from stopped sessions (their broadcasts die with the sc).
+#: data, so caching them cannot stale. The key names the context by its
+#: application id and start time, never ``id(sc)``: a new context can
+#: reuse a stopped one's address, and its entry's broadcast died with it.
+#: Values are (udf, plane broadcast); past the cap the oldest entry is
+#: evicted and, if it belongs to the current context, its broadcast
+#: unpersisted.
 _BAND_HASH_UDF_CACHE: dict = {}
+_BAND_HASH_UDF_CACHE_MAX = 32
 
 
 def _band_hash_udf(sc, bands: int, bits: int, dims: int):
-    key = (id(sc), bands, bits, dims)
+    key = (sc.applicationId, sc.startTime, bands, bits, dims)
     hit = _BAND_HASH_UDF_CACHE.get(key)
     if hit is not None:
-        return hit
+        return hit[0]
     S = _rademacher_planes(bands, bits, dims).astype(np.float64)
     bc_planes = sc.broadcast(S)
     weights = 1 << np.arange(bits, dtype=np.int64)
@@ -829,9 +834,14 @@ def _band_hash_udf(sc, bands: int, bits: int, dims: int):
         bit_m = (proj > 0).astype(np.int64).reshape(len(q), bands, bits)
         return pd.Series(list((bit_m * weights).sum(axis=2)))
 
-    if len(_BAND_HASH_UDF_CACHE) > 32:
-        _BAND_HASH_UDF_CACHE.clear()
-    _BAND_HASH_UDF_CACHE[key] = band_hashes
+    if len(_BAND_HASH_UDF_CACHE) >= _BAND_HASH_UDF_CACHE_MAX:
+        oldest = next(iter(_BAND_HASH_UDF_CACHE))
+        _, old_planes = _BAND_HASH_UDF_CACHE.pop(oldest)
+        # a stopped context's broadcast died with it, and broadcast ids
+        # restart per context: unpersisting it could drop a live one
+        if oldest[:2] == key[:2]:
+            old_planes.unpersist()
+    _BAND_HASH_UDF_CACHE[key] = (band_hashes, bc_planes)
     return band_hashes
 
 

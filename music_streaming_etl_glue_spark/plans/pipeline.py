@@ -5,12 +5,19 @@ Replaces the reference's Airflow DAG + three Glue jobs
 orchestration over lazy DataFrame plans. Key differences, all
 deliberate (SURVEY §4):
 
-* The enriched frame is **cached once** and fanned out to all KPI queries
-  — the reference rebuilds the 3-way join for every KPI table and every
-  logging ``count()`` (its single biggest waste).
+* **Compute once.** The enriched frame is cached once and fanned out to
+  the KPI queries, and each KPI frame is persisted once and fanned out to
+  every sink: its own parquet table, the serving parquet and the KV
+  backend. The serving items are projections of the persisted KPI rows
+  (the reference's *serve* job likewise loads what *compute* wrote), so
+  no aggregate or window runs twice in one run — the reference rebuilds
+  the 3-way join for every KPI table and every logging ``count()``.
 * KPI outputs are written ``partitionBy(date)`` where a date key exists,
-  so downstream reads get partition pruning; the reference writes flat
-  directories.
+  hash-repartitioned on ``date`` first so each ``date=`` directory holds
+  one file; downstream reads get partition pruning without a small-file
+  fan-out. The reference writes flat directories.
+* Written row counts come from the parquet footers (no read-back job)
+  and must equal the rows observed during the write itself.
 * Fact writes append, dimension/KPI writes overwrite — same contract as
   the reference (``validate_data.py:316-318``).
 * Serving-item shaping happens in the plan (no collect), and the KV write
@@ -20,18 +27,24 @@ deliberate (SURVEY §4):
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 import time
 import uuid
 from dataclasses import dataclass
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from music_streaming_etl_glue_spark.operators import kpis as K
 from music_streaming_etl_glue_spark.operators.enrich import enrich_events
-from music_streaming_etl_glue_spark.operators.serving import serving_items
+from music_streaming_etl_glue_spark.operators.serving import items_from_kpis
+from music_streaming_etl_glue_spark.plans.lakehouse import _file_rows
+from music_streaming_etl_glue_spark.plans.quality import (
+    assert_serving_quality,
+    observed_write_metrics,
+)
 from music_streaming_etl_glue_spark.sources.catalog import load_table
 from music_streaming_etl_glue_spark.sources.kv_sink import (
     write_kv,
@@ -169,54 +182,104 @@ def _run_batch_pipeline(
     nation = load_table(spark, sf_dir, "nation")
 
     enriched = enrich_events(events, customer, nation).cache()
-
-    kpi_frames: dict[str, DataFrame] = {
-        "user_kpis": K.user_kpis(enriched),
-        "genre_daily_metrics": K.genre_daily_metrics(enriched),
-        "genre_top_songs": K.genre_top_songs(enriched),
-        "genre_top_genres": K.genre_top_genres(enriched),
-        "trending_tracks": K.trending_tracks(enriched),
-    }
-
-    kpi_rows: dict[str, int] = {}
-    for name, df in kpi_frames.items():
-        path = os.path.join(output_dir, name)
-        writer = df.write.mode("overwrite")
-        if "date" in df.columns:
-            writer = writer.partitionBy("date")
-        run_stage_with_retry(lambda w=writer, p=path: w.parquet(p))
-        kpi_rows[name] = spark.read.parquet(path).count()
-
-    items = serving_items(enriched, batch_ts, materialize=False)  # cached above
-    # QA counters ride the write action itself (DataFrame.observe) — the
-    # gate costs zero extra passes over the serving frame.
-    from music_streaming_etl_glue_spark.plans.quality import (
-        observed_write_metrics,
-    )
-
-    observed_items, qa_obs = observed_write_metrics(items)
-    run_stage_with_retry(
-        lambda: write_serving_parquet(
-            observed_items, os.path.join(output_dir, "serving_items")
+    try:
+        result = _write_outputs(
+            spark, enriched, output_dir, batch_ts, kv_writer_factory
         )
-    )
-    serving_qa = {k: int(v) for k, v in qa_obs.get.items()}
-    serving_rows = spark.read.parquet(
-        os.path.join(output_dir, "serving_items")
-    ).count()
-    if kv_writer_factory is not None:
-        run_stage_with_retry(lambda: write_kv(items, kv_writer_factory))
-
-    enriched.unpersist()
+    finally:
+        enriched.unpersist()
     # provenance stamp: which engine code produced these outputs
     # (verify_engine_fingerprint checks it before serving/extending)
     record_engine_fingerprint(output_dir)
-    return PipelineResult(
-        kpi_rows=kpi_rows,
-        serving_rows=serving_rows,
-        output_dir=output_dir,
-        serving_qa=serving_qa,
+    return result
+
+
+def _write_outputs(
+    spark: SparkSession,
+    enriched: DataFrame,
+    out_dir: str,
+    batch_ts: str,
+    kv_writer_factory: Callable[[], Callable[[list[dict[str, Any]]], None]]
+    | None = None,
+    qa_gate: bool = False,
+) -> PipelineResult:
+    """Every output of one run, each KPI computed once: persist the five
+    KPI frames, write each as its parquet table, shape the serving items
+    from the persisted rows, and write them to the serving parquet and
+    (given a ``kv_writer_factory``) the KV backend. ``qa_gate`` raises on
+    any serving-quality violation before the serving write; the QA
+    counters are observed during that write either way.
+
+    Every written row count is summed from the parquet footers and must
+    equal the rows the write itself observed. The persisted frames are
+    released before returning, also when a stage raises."""
+    width = spark.sparkContext.defaultParallelism
+    # persisted in dict order: genre_daily_metrics before genre_top_genres,
+    # whose cached plan then reads the daily rows from the cache
+    frames = {name: df.persist() for name, df in K.kpi_tables(enriched).items()}
+    try:
+        kpi_rows: dict[str, int] = {}
+        for name, df in frames.items():
+            path = os.path.join(out_dir, name)
+
+            # each attempt observes its own count: a failed attempt's
+            # observation holds only the tasks that finished
+            def write_kpi(df: DataFrame = df, path: str = path) -> int:
+                obs = Observation()
+                _write_kpi(
+                    df.observe(obs, F.count(F.lit(1)).alias("rows")), path, width
+                )
+                return obs.get["rows"]
+
+            kpi_rows[name] = _footer_rows(path, run_stage_with_retry(write_kpi))
+
+        items = items_from_kpis(frames, batch_ts).coalesce(width)
+        if qa_gate:
+            assert_serving_quality(items)
+        serving_dir = os.path.join(out_dir, "serving_items")
+
+        # QA counters ride the write action itself (DataFrame.observe) —
+        # the counters cost zero extra passes over the serving frame.
+        def write_serving() -> dict[str, int]:
+            observed_items, qa_obs = observed_write_metrics(items)
+            write_serving_parquet(observed_items, serving_dir)
+            return {k: int(v or 0) for k, v in qa_obs.get.items()}
+
+        serving_qa = run_stage_with_retry(write_serving)
+        serving_rows = _footer_rows(serving_dir, serving_qa["n_items"])
+        if kv_writer_factory is not None:
+            run_stage_with_retry(lambda: write_kv(items, kv_writer_factory))
+    finally:
+        # dependents first: genre_top_genres is cached over genre_daily
+        for df in reversed(list(frames.values())):
+            df.unpersist()
+    return PipelineResult(kpi_rows, serving_rows, out_dir, serving_qa)
+
+
+def _write_kpi(df: DataFrame, path: str, width: int) -> None:
+    """Overwrite one KPI table. A table with a ``date`` key is written
+    ``partitionBy(date)`` after a hash repartition on it: every row of one
+    date lands in one task, so each ``date=`` directory gets one file."""
+    writer = df.write
+    if "date" in df.columns:
+        writer = df.repartition(width, "date").write.partitionBy("date")
+    writer.mode("overwrite").parquet(path)
+
+
+def _footer_rows(path: str, observed: int) -> int:
+    """Rows of the parquet files under ``path``, summed from their footers
+    (no Spark job); raises unless that equals ``observed``, the row count
+    seen while the files were written."""
+    written = sum(
+        _file_rows(f)
+        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
+    if written != observed:
+        raise RuntimeError(
+            f"{path}: parquet footers hold {written} rows, "
+            f"the write observed {observed}"
+        )
+    return written
 
 
 def run_incremental_pipeline(
@@ -259,11 +322,7 @@ def _run_incremental(
     archive: bool,
     qa_gate: bool,
 ) -> IncrementalResult:
-    from music_streaming_etl_glue_spark.operators import serving as _serving
     from music_streaming_etl_glue_spark.plans.incremental import FileLedger
-    from music_streaming_etl_glue_spark.plans.quality import (
-        assert_serving_quality,
-    )
     from music_streaming_etl_glue_spark.sources.probes import (
         archive_files,
         list_files,
@@ -291,30 +350,10 @@ def _run_incremental(
     customer = load_table(spark, dims_dir, "customer")
     nation = load_table(spark, dims_dir, "nation")
     enriched = enrich_events(events, customer, nation).cache()
-
-    kpi_rows: dict[str, int] = {}
-    for name, df in {
-        "user_kpis": K.user_kpis(enriched),
-        "genre_daily_metrics": K.genre_daily_metrics(enriched),
-        "genre_top_songs": K.genre_top_songs(enriched),
-        "genre_top_genres": K.genre_top_genres(enriched),
-        "trending_tracks": K.trending_tracks(enriched),
-    }.items():
-        path = os.path.join(out_dir, name)
-        writer = df.write.mode("overwrite")
-        if "date" in df.columns:
-            writer = writer.partitionBy("date")
-        run_stage_with_retry(lambda w=writer, p=path: w.parquet(p))
-        kpi_rows[name] = spark.read.parquet(path).count()
-
-    items = _serving.serving_items(enriched, batch_ts, materialize=False)
-    if qa_gate:
-        assert_serving_quality(items)
-    run_stage_with_retry(
-        lambda: write_serving_parquet(items, os.path.join(out_dir, "serving_items"))
-    )
-    serving_rows = spark.read.parquet(os.path.join(out_dir, "serving_items")).count()
-    enriched.unpersist()
+    try:
+        kpi = _write_outputs(spark, enriched, out_dir, batch_ts, qa_gate=qa_gate)
+    finally:
+        enriched.unpersist()
 
     archived: list[str] = []
     if archive and new_files:
@@ -325,7 +364,7 @@ def _run_incremental(
     return IncrementalResult(
         new_files=new_files,
         fact_rows=events.count(),
-        kpi=PipelineResult(kpi_rows, serving_rows, out_dir),
+        kpi=kpi,
         archived=archived,
     )
 
