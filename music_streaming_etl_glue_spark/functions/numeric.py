@@ -26,7 +26,3 @@ def exact_sum(col: Column | str, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
 
-
-def exact_avg(col: Column | str, count_col: Column, scale: int = 2) -> Column:
-    """AVG derived from the exact sum — a single deterministic IEEE divide."""
-    return exact_sum(col, scale) / count_col

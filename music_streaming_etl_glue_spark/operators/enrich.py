@@ -50,7 +50,6 @@ def enrich_events(
     events: DataFrame,
     customer: DataFrame,
     nation: DataFrame,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """events ⟕ customer ⟕ nation → enriched listen-event wide table.
 
@@ -65,18 +64,19 @@ def enrich_events(
         F.col("ts").alias("timestamp"),
         F.col("value").alias("listening_time"),
     )
-    users = customer.select(
-        F.col("c_custkey").alias("user_user_id"),
-        F.col("c_name").alias("user_name"),
-        F.col("c_nationkey").alias("user_nationkey"),
+    users = F.broadcast(
+        customer.select(
+            F.col("c_custkey").alias("user_user_id"),
+            F.col("c_name").alias("user_name"),
+            F.col("c_nationkey").alias("user_nationkey"),
+        )
     )
-    nations = nation.select(
-        F.col("n_nationkey").alias("nation_key"),
-        F.col("n_name").alias("user_country"),
+    nations = F.broadcast(
+        nation.select(
+            F.col("n_nationkey").alias("nation_key"),
+            F.col("n_name").alias("user_country"),
+        )
     )
-    if broadcast_dims:
-        users = F.broadcast(users)
-        nations = F.broadcast(nations)
 
     # J1/J2: chained left equi-joins (Catalyst → BroadcastHashJoin).
     joined = fact.join(

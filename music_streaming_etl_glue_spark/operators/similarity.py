@@ -15,6 +15,21 @@ Scale design (100 TB of vectors):
   approximation itself is oracle-checkable in DuckDB with identical SQL.
 * Scores are rounded to 6 decimals before ranking/filtering so results are
   reproducible across summation orders (Spark fold vs BLAS vs DuckDB).
+
+Index codec: the on-disk IVF / PQ / IVF-PQ layout is defined once, by the
+private helpers in the "index codec" section, and every writer and reader
+goes through them. A layout is parquet rows at ``path`` (IVF layouts
+partitioned into ``assigned_label=`` cell dirs, plus an ``epoch=`` level
+when streamed), each PQ row carrying ``codes``: the vector's M codebook
+ids in subspace order. The pinned training artifacts sit beside the rows
+at ``path/_centroids`` (assigned_label, cvec) and ``path/_codebook``
+(s, code, cvec): ``_write_artifacts`` writes them, ``_read_centroids`` /
+``_read_codebook`` read them. ``_pq_encode`` packs codes (``_ivfpq_encode``
+also tags the cell), ``_pq_decode`` explodes them back to (vec_id, s,
+code), ``_pq_adc`` scores decoded codes against a broadcast per-query
+lookup table, ``_pq_sq_err`` measures reconstruction error, and
+``_probe_cells`` picks a single query's nearest cells. The trained and
+``*_cached`` PQ twins differ only in where codes and codebook come from.
 """
 
 from __future__ import annotations
@@ -545,13 +560,9 @@ def write_ivf_centroid_layout(embeddings: DataFrame, path: str) -> None:
     v.join(assign, "vec_id").write.mode("overwrite").partitionBy(
         "assigned_label"
     ).parquet(path)
-    # persist the trained centroids INSIDE the layout (underscore prefix →
-    # invisible to the main parquet listing, like _SUCCESS): the probe
-    # ranks cells from this k-row table instead of re-deriving centroids
-    # with a full corpus pass at query time
-    import os
-
-    cents.write.mode("overwrite").parquet(os.path.join(path, "_centroids"))
+    # the probe ranks cells from the pinned k-row centroid table instead
+    # of re-deriving centroids with a full corpus pass at query time
+    _write_artifacts(path, centroids=cents)
 
 
 def ann_topk_ivf_centroid(
@@ -570,37 +581,13 @@ def ann_topk_ivf_centroid(
     aggregate (legitimate driver coordination, like fetching the query
     vector); the corpus-side read is partition-pruned to the probed
     cells. Builds the layout atomically on first use."""
-    import os
-
-    if not os.path.exists(os.path.join(ivf_path, "_SUCCESS")):
-        _build_layout_atomic(
-            lambda tmp: write_ivf_centroid_layout(embeddings, tmp), ivf_path
-        )
-
-    qrow = (
-        embeddings.filter(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .head()
+    _build_layout_atomic(
+        lambda tmp: write_ivf_centroid_layout(embeddings, tmp), ivf_path
     )
-    qv = np.asarray(qrow[0], dtype=np.float64)
+    qv, qlit, probes = _probe_cells(
+        spark, embeddings, ivf_path, query_vec_id, nprobe
+    )
     qnorm = float(np.sqrt(qv @ qv))
-
-    # rank cells with the oracle's exact arithmetic: sequential-fold dots
-    # against the rounded centroids persisted in the layout, distance
-    # rounded before the ordering — a k-row read, not a corpus pass
-    cents = spark.read.parquet(os.path.join(ivf_path, "_centroids"))
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
-    c = F.col("cvec")
-    dist = F.round(
-        F.lit(float(qv @ qv)) - 2 * _dot(qlit, c) + _dot(c, c), ROUND
-    )
-    probe_rows = (
-        cents.select("assigned_label", dist.alias("dist"))
-        .orderBy("dist", "assigned_label")
-        .limit(nprobe)
-        .collect()
-    )
-    probes = [r["assigned_label"] for r in probe_rows]
 
     vecs = spark.read.parquet(ivf_path)
     probed = vecs.filter(
@@ -2053,23 +2040,28 @@ def _pq_seeds(subvectors: DataFrame) -> DataFrame:
     )
 
 
+def _pq_dist() -> Column:
+    """Rounded L2² between ``subvec`` and codebook entry ``cvec`` via the
+    dot identity — three left-associated folds, the exact expression the
+    DuckDB twin runs, so rounded distances are bit-stable."""
+    d2 = (
+        _dot(F.col("subvec"), F.col("subvec"))
+        + _dot(F.col("cvec"), F.col("cvec"))
+        - 2 * _dot(F.col("subvec"), F.col("cvec"))
+    )
+    return F.round(d2, PQ_DIST_ROUND)
+
+
 def _pq_assign(subvectors: DataFrame, codebook: DataFrame) -> DataFrame:
     """(vec_id, s, code): nearest codebook entry per subspace. L2²
     distances are rounded to PQ_DIST_ROUND then min(struct(dist, code))
     breaks ties by code id — bit-stable across engines and partitionings.
     The codebook is M·K rows -> broadcast; the join fans each of the n·M
     subvectors out K ways, then a map-side-combinable min collapses it."""
-    # L2² via the dot identity — three left-associated folds, the exact
-    # expression the DuckDB twin runs, so rounded distances are bit-stable
-    d2 = (
-        _dot(F.col("subvec"), F.col("subvec"))
-        + _dot(F.col("cvec"), F.col("cvec"))
-        - 2 * _dot(F.col("subvec"), F.col("cvec"))
-    )
     scored = subvectors.join(F.broadcast(codebook), "s").select(
         "vec_id",
         "s",
-        F.round(d2, PQ_DIST_ROUND).alias("dist"),
+        _pq_dist().alias("dist"),
         "code",
     )
     return (
@@ -2107,14 +2099,194 @@ def _pq_codebook(embeddings: DataFrame) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# index codec: the one definition of the on-disk IVF / PQ / IVF-PQ layout
+# and of the encode, decode and ADC steps over it (module docstring)
+# ---------------------------------------------------------------------------
+
+
+def _write_artifacts(
+    path: str,
+    centroids: DataFrame | None = None,
+    codebook: DataFrame | None = None,
+) -> None:
+    """Pin the training artifacts inside the layout at ``path``: k-means
+    centroids (assigned_label, cvec) at ``_centroids``, the PQ codebook
+    (s, code, cvec) at ``_codebook``. The underscore prefix keeps both
+    out of the layout's parquet listing, like ``_SUCCESS``."""
+    import os
+
+    for name, df in (("_centroids", centroids), ("_codebook", codebook)):
+        if df is not None:
+            df.write.mode("overwrite").parquet(os.path.join(path, name))
+
+
+def _read_centroids(spark, path: str) -> DataFrame:
+    """The layout's pinned (assigned_label, cvec) centroids."""
+    import os
+
+    return spark.read.parquet(os.path.join(path, "_centroids"))
+
+
+def _read_codebook(spark, path: str) -> DataFrame:
+    """The layout's pinned (s, code, cvec) PQ codebook."""
+    import os
+
+    return spark.read.parquet(os.path.join(path, "_codebook"))
+
+
+def _probe_cells(
+    spark, embeddings: DataFrame, path: str, query_vec_id: int, nprobe: int
+) -> tuple[np.ndarray, Column, list]:
+    """(query vector, its array literal, probed labels) for one query:
+    cells ranked with the oracle's exact arithmetic — sequential-fold
+    dots against the layout's rounded centroids, distance rounded before
+    the ordering — a ~#cells-row read, not a corpus pass."""
+    qrow = (
+        embeddings.filter(F.col("vec_id") == query_vec_id)
+        .select("embedding")
+        .head()
+    )
+    qv = np.asarray(qrow[0], dtype=np.float64)
+    qlit = F.array(*[F.lit(float(x)) for x in qv])
+    c = F.col("cvec")
+    dist = F.round(
+        F.lit(float(qv @ qv)) - 2 * _dot(qlit, c) + _dot(c, c), ROUND
+    )
+    probes = [
+        r["assigned_label"]
+        for r in _read_centroids(spark, path)
+        .select("assigned_label", dist.alias("dist"))
+        .orderBy("dist", "assigned_label")
+        .limit(nprobe)
+        .collect()
+    ]
+    return qv, qlit, probes
+
+
+def _pq_encode(vectors: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(vec_id, codes): each vector's M codebook ids packed in subspace
+    order — the code column every PQ layout stores."""
+    return (
+        _pq_assign(_pq_subvectors(vectors), codebook)
+        .groupBy("vec_id")
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("s", "code"))),
+                lambda t: t["code"],
+            ).alias("codes")
+        )
+    )
+
+
+def _ivfpq_encode(
+    vectors: DataFrame, centroids: DataFrame, codebook: DataFrame
+) -> DataFrame:
+    """(vec_id, codes, assigned_label): the rows of an IVF-PQ layout —
+    packed codes tagged with the vector's nearest cell."""
+    assign = _assign_to_centroids(vectors, centroids).select(
+        "vec_id", "assigned_label"
+    )
+    return _pq_encode(vectors, codebook).join(assign, "vec_id")
+
+
+def _pq_decode(packed: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, s, code): packed codes back to one row per
+    subspace, the relation ADC and the reconstruction audit join on."""
+    return packed.select(
+        "vec_id", *keep, F.posexplode("codes").alias("s", "code")
+    ).withColumn("s", F.col("s").cast("long"))
+
+
+def _pq_adc(
+    codes: DataFrame,
+    codebook: DataFrame,
+    queries: DataFrame,
+    score: str,
+    by_query: bool = False,
+) -> DataFrame:
+    """ADC similarity of decoded ``codes`` (vec_id, s, code) against the
+    ``queries`` rows (embeddings shape): each query's M·K lookup table of
+    rounded subspace dots is broadcast, and a vector's score is the sum
+    of the M entries its codes pick — no corpus floats are touched.
+    Returns (vec_id, score), or (query_id, vec_id, score) with the LUT
+    keyed by query when ``by_query`` (the codes must then carry
+    ``query_id``). Callers drop self-matches from ``codes`` first."""
+    key = ["query_id"] if by_query else []
+    qid = [F.col("vec_id").alias("query_id")] if by_query else []
+    qsub = _pq_subvectors(queries).select(
+        *qid, "s", F.col("subvec").alias("qvec")
+    )
+    lut = codebook.join(qsub, "s").select(
+        *key,
+        "s",
+        "code",
+        F.round(_dot(F.col("cvec"), F.col("qvec")), PQ_DIST_ROUND).alias(
+            "partial"
+        ),
+    )
+    return (
+        codes.join(F.broadcast(lut), [*key, "s", "code"])
+        .groupBy(*key, "vec_id")
+        .agg(F.round(F.sum("partial"), ROUND).alias(score))
+    )
+
+
+def _pq_sq_err(
+    codes: DataFrame, subs: DataFrame, codebook: DataFrame
+) -> DataFrame:
+    """(vec_id, sq_err): squared L2 between each subvector and the
+    codebook entry its code names, summed per vector."""
+    per_sub = (
+        codes.join(subs, ["vec_id", "s"])
+        .join(F.broadcast(codebook), ["s", "code"])
+        .select("vec_id", _pq_dist().alias("d2"))
+    )
+    return per_sub.groupBy("vec_id").agg(
+        F.round(F.sum("d2"), ROUND).alias("sq_err")
+    )
+
+
+def _codebook_rows(codebook: DataFrame) -> DataFrame:
+    """(s, code, d, value): the codebook exploded to one row per dim."""
+    return codebook.select(
+        "s", "code", F.posexplode("cvec").alias("d", "value")
+    ).withColumn("d", F.col("d").cast("long"))
+
+
+def _codes_string(packed: DataFrame) -> DataFrame:
+    """(vec_id, codes): the M codes joined into one comma-separated
+    string (the stamped catalog form)."""
+    return packed.select(
+        "vec_id",
+        F.array_join(F.col("codes").cast("array<string>"), ",").alias(
+            "codes"
+        ),
+    )
+
+
+def _pq_topk(
+    codes: DataFrame,
+    codebook: DataFrame,
+    embeddings: DataFrame,
+    k: int,
+    query_vec_id: int,
+) -> DataFrame:
+    """ADC top-k of one query over decoded ``codes``."""
+    scored = _pq_adc(
+        codes.filter(F.col("vec_id") != query_vec_id),
+        codebook,
+        embeddings.filter(F.col("vec_id") == query_vec_id),
+        "similarity",
+    )
+    return _ranked_topk(scored, k)
+
+
 def pq_codebooks(embeddings: DataFrame) -> DataFrame:
     """Trained PQ codebooks in exploded (s, code, d, value) form — the
     audit/persistence surface of the training step (store this next to
     the codes; at serve time it is the only thing the scorer loads)."""
-    cb = _pq_codebook(embeddings)
-    return cb.select(
-        "s", "code", F.posexplode("cvec").alias("d", "value")
-    ).withColumn("d", F.col("d").cast("long"))
+    return _codebook_rows(_pq_codebook(embeddings))
 
 
 def pq_codes(embeddings: DataFrame) -> DataFrame:
@@ -2123,14 +2295,7 @@ def pq_codes(embeddings: DataFrame) -> DataFrame:
     compression that lets a 100 TB corpus' ANN index live in cluster
     memory. Encoding is one broadcast join + min per subvector; nothing
     wide shuffles."""
-    cb = _pq_codebook(embeddings)
-    assigned = _pq_assign(_pq_subvectors(embeddings), cb)
-    return assigned.groupBy("vec_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("s", "code"))),
-            lambda t: t["code"],
-        ).alias("codes")
-    )
+    return _pq_encode(embeddings, _pq_codebook(embeddings))
 
 
 def pq_codes_packed(embeddings: DataFrame) -> DataFrame:
@@ -2140,12 +2305,7 @@ def pq_codes_packed(embeddings: DataFrame) -> DataFrame:
     pandas canonicalizer sorts every column and list cells are
     unhashable there. Internal consumers (ADC scoring, IVF-PQ) keep the
     ``array<int>`` form from :func:`pq_codes`."""
-    return pq_codes(embeddings).select(
-        "vec_id",
-        F.array_join(F.col("codes").cast("array<string>"), ",").alias(
-            "codes"
-        ),
-    )
+    return _codes_string(pq_codes(embeddings))
 
 
 def pq_reconstruction_error(
@@ -2163,20 +2323,7 @@ def pq_reconstruction_error(
     Python."""
     cb = _pq_codebook(embeddings) if codebook is None else codebook
     subs = _pq_subvectors(embeddings)
-    codes = _pq_assign(subs, cb)
-    d2 = (
-        _dot(F.col("subvec"), F.col("subvec"))
-        + _dot(F.col("cvec"), F.col("cvec"))
-        - 2 * _dot(F.col("subvec"), F.col("cvec"))
-    )
-    per_sub = (
-        codes.join(subs, ["vec_id", "s"])
-        .join(F.broadcast(cb), ["s", "code"])
-        .select("vec_id", F.round(d2, PQ_DIST_ROUND).alias("d2"))
-    )
-    return per_sub.groupBy("vec_id").agg(
-        F.round(F.sum("d2"), ROUND).alias("sq_err")
-    )
+    return _pq_sq_err(_pq_assign(subs, cb), subs, cb)
 
 
 def ann_topk_pq(
@@ -2192,26 +2339,7 @@ def ann_topk_pq(
     checks it hash-exactly."""
     cb = _pq_codebook(embeddings)
     codes = _pq_assign(_pq_subvectors(embeddings), cb)
-    qsub = _pq_subvectors(
-        embeddings.filter(F.col("vec_id") == query_vec_id)
-    ).select("s", F.col("subvec").alias("qvec"))
-    lut = (
-        cb.join(qsub, "s")
-        .select(
-            "s",
-            "code",
-            F.round(_dot(F.col("cvec"), F.col("qvec")), PQ_DIST_ROUND).alias(
-                "partial"
-            ),
-        )
-    )
-    scored = (
-        codes.filter(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(lut), ["s", "code"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("partial"), ROUND).alias("similarity"))
-    )
-    return _ranked_topk(scored, k)
+    return _pq_topk(codes, cb, embeddings, k, query_vec_id)
 
 
 def _pq_ctes(dims: int = EMBED_DIMS) -> str:
@@ -2442,33 +2570,17 @@ def write_pq_layout(embeddings: DataFrame, path: str) -> None:
     ``path/_codebook`` (underscore prefix → invisible to the main
     parquet listing). Training runs exactly once here; every probe
     afterwards is codes-only."""
-    import os
-
     cb = _pq_codebook(embeddings).localCheckpoint()
-    packed = (
-        _pq_assign(_pq_subvectors(embeddings), cb)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("s", "code"))),
-                lambda t: t["code"],
-            ).alias("codes")
-        )
-    )
-    packed.write.mode("overwrite").parquet(path)
-    cb.write.mode("overwrite").parquet(os.path.join(path, "_codebook"))
+    _pq_encode(embeddings, cb).write.mode("overwrite").parquet(path)
+    _write_artifacts(path, codebook=cb)
 
 
 def _pq_layout(spark, embeddings: DataFrame, path: str):
-    """(codes, codebook) DataFrames from the on-disk PQ index, building
-    it atomically on first use (same contract as the IVF layouts)."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _build_layout_atomic(lambda tmp: write_pq_layout(embeddings, tmp), path)
-    codes = spark.read.parquet(path)
-    codebook = spark.read.parquet(os.path.join(path, "_codebook"))
-    return codes, codebook
+    """(packed codes, codebook) DataFrames from the on-disk PQ index,
+    building it atomically on first use (same contract as the IVF
+    layouts) — where every ``*_cached`` twin gets its inputs."""
+    _build_layout_atomic(lambda tmp: write_pq_layout(embeddings, tmp), path)
+    return spark.read.parquet(path), _read_codebook(spark, path)
 
 
 def pq_codebooks_cached(spark, embeddings: DataFrame, path: str) -> DataFrame:
@@ -2476,9 +2588,7 @@ def pq_codebooks_cached(spark, embeddings: DataFrame, path: str) -> DataFrame:
     rows (training is deterministic), one 256-row read instead of a
     training pass."""
     _, cb = _pq_layout(spark, embeddings, path)
-    return cb.select(
-        "s", "code", F.posexplode("cvec").alias("d", "value")
-    ).withColumn("d", F.col("d").cast("long"))
+    return _codebook_rows(cb)
 
 
 def pq_codes_cached(spark, embeddings: DataFrame, path: str) -> DataFrame:
@@ -2496,23 +2606,7 @@ def pq_reconstruction_error_cached(
     the form the append path's drift gate actually runs (identical
     rows: training is deterministic)."""
     packed, cb = _pq_layout(spark, embeddings, path)
-    codes = packed.select(
-        "vec_id", F.posexplode("codes").alias("s", "code")
-    ).withColumn("s", F.col("s").cast("long"))
-    subs = _pq_subvectors(embeddings)
-    d2 = (
-        _dot(F.col("subvec"), F.col("subvec"))
-        + _dot(F.col("cvec"), F.col("cvec"))
-        - 2 * _dot(F.col("subvec"), F.col("cvec"))
-    )
-    per_sub = (
-        codes.join(subs, ["vec_id", "s"])
-        .join(F.broadcast(cb), ["s", "code"])
-        .select("vec_id", F.round(d2, PQ_DIST_ROUND).alias("d2"))
-    )
-    return per_sub.groupBy("vec_id").agg(
-        F.round(F.sum("d2"), ROUND).alias("sq_err")
-    )
+    return _pq_sq_err(_pq_decode(packed), _pq_subvectors(embeddings), cb)
 
 
 def pq_codes_packed_cached(
@@ -2520,12 +2614,7 @@ def pq_codes_packed_cached(
 ) -> DataFrame:
     """:func:`pq_codes_packed` served from the persisted layout — same
     rows, scalar string column (the stamped catalog form)."""
-    return pq_codes_cached(spark, embeddings, path).select(
-        "vec_id",
-        F.array_join(F.col("codes").cast("array<string>"), ",").alias(
-            "codes"
-        ),
-    )
+    return _codes_string(pq_codes_cached(spark, embeddings, path))
 
 
 def ann_topk_pq_cached(
@@ -2540,26 +2629,7 @@ def ann_topk_pq_cached(
     the stored codebook + one point-lookup of the query vector. Same
     scores as :func:`ann_topk_pq`, same oracle."""
     packed, cb = _pq_layout(spark, embeddings, path)
-    codes = packed.select(
-        "vec_id", F.posexplode("codes").alias("s", "code")
-    ).withColumn("s", F.col("s").cast("long"))
-    qsub = _pq_subvectors(
-        embeddings.filter(F.col("vec_id") == query_vec_id)
-    ).select("s", F.col("subvec").alias("qvec"))
-    lut = cb.join(qsub, "s").select(
-        "s",
-        "code",
-        F.round(_dot(F.col("cvec"), F.col("qvec")), PQ_DIST_ROUND).alias(
-            "partial"
-        ),
-    )
-    scored = (
-        codes.filter(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(lut), ["s", "code"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("partial"), ROUND).alias("similarity"))
-    )
-    return _ranked_topk(scored, k)
+    return _pq_topk(_pq_decode(packed), cb, embeddings, k, query_vec_id)
 
 
 def ann_topk_pq_rerank_cached(
@@ -2585,28 +2655,12 @@ def write_ivfpq_layout(embeddings: DataFrame, path: str) -> None:
     ``_codebook``. The full 100 TB ANN layout: partition pruning picks
     the cells, the pruned read is 8-byte codes, and only the rerank
     shortlist ever touches raw vectors."""
-    import os
-
     cents = _centroid_arrays(label_centroids(embeddings)).localCheckpoint()
-    assign = _assign_to_centroids(embeddings, cents).select(
-        "vec_id", "assigned_label"
-    )
     cb = _pq_codebook(embeddings).localCheckpoint()
-    packed = (
-        _pq_assign(_pq_subvectors(embeddings), cb)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("s", "code"))),
-                lambda t: t["code"],
-            ).alias("codes")
-        )
-    )
-    packed.join(assign, "vec_id").write.mode("overwrite").partitionBy(
+    _ivfpq_encode(embeddings, cents, cb).write.mode("overwrite").partitionBy(
         "assigned_label"
     ).parquet(path)
-    cents.write.mode("overwrite").parquet(os.path.join(path, "_centroids"))
-    cb.write.mode("overwrite").parquet(os.path.join(path, "_codebook"))
+    _write_artifacts(path, centroids=cents, codebook=cb)
 
 
 def refresh_ivfpq_layout(spark, appended: DataFrame, path: str) -> None:
@@ -2625,26 +2679,9 @@ def refresh_ivfpq_layout(spark, appended: DataFrame, path: str) -> None:
     re-encoding a changed vec_id would duplicate it in the layout, so
     changed/removed rows need a cell-partition rewrite instead (the
     same touched-partition discipline as plans.merge)."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    cb = spark.read.parquet(os.path.join(path, "_codebook"))
-    assign = _assign_to_centroids(appended, cents).select(
-        "vec_id", "assigned_label"
-    )
-    packed = (
-        _pq_assign(_pq_subvectors(appended), cb)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("s", "code"))),
-                lambda t: t["code"],
-            ).alias("codes")
-        )
-    )
-    packed.join(assign, "vec_id").write.mode("append").partitionBy(
-        "assigned_label"
-    ).parquet(path)
+    _ivfpq_encode(
+        appended, _read_centroids(spark, path), _read_codebook(spark, path)
+    ).write.mode("append").partitionBy("assigned_label").parquet(path)
 
 
 def _heal_parked_cells(path: str) -> None:
@@ -2694,7 +2731,6 @@ def rewrite_ivfpq_cells(spark, path: str, drop_ids: DataFrame) -> list:
     filter on the read side; this engine ships the rewrite because the
     done-signal is stronger (no query-time filter to forget)."""
     import os
-    import shutil
     import time
 
     # self-heal a previous HARD crash mid-swap (ADVICE r9: process
@@ -2886,7 +2922,7 @@ def retrain_ivfpq_layout(
     for leftover in glob.glob(f"{path}.retrain-*"):
         shutil.rmtree(leftover, ignore_errors=True)  # pre-cutover debris
 
-    cb = spark.read.parquet(os.path.join(path, "_codebook"))
+    cb = _read_codebook(spark, path)
     mean_err = float(
         pq_reconstruction_error(embeddings, codebook=cb)
         .agg(F.avg("sq_err"))
@@ -3000,7 +3036,7 @@ def retrain_ivfpq_lake(
     from music_streaming_etl_glue_spark.plans import lakehouse
 
     live = current_ivfpq_layout(spark, registry_dir)
-    cb = spark.read.parquet(os.path.join(live, "_codebook"))
+    cb = _read_codebook(spark, live)
     mean_err = float(
         pq_reconstruction_error(embeddings, codebook=cb)
         .agg(F.avg("sq_err"))
@@ -3101,53 +3137,17 @@ def ann_topk_ivfpq(
     LUT, then exact-rerank the shortlist. Every stage of the production
     funnel — prune, compressed scan, rerank — in one deterministic,
     oracle-checked plan."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _build_layout_atomic(lambda tmp: write_ivfpq_layout(embeddings, tmp), path)
-
-    qrow = (
-        embeddings.filter(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .head()
-    )
-    qv = np.asarray(qrow[0], dtype=np.float64)
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    c = F.col("cvec")
-    dist = F.round(
-        F.lit(float(qv @ qv)) - 2 * _dot(qlit, c) + _dot(c, c), ROUND
-    )
-    probes = [
-        r["assigned_label"]
-        for r in cents.select("assigned_label", dist.alias("dist"))
-        .orderBy("dist", "assigned_label")
-        .limit(nprobe)
-        .collect()
-    ]
-
+    _build_layout_atomic(lambda tmp: write_ivfpq_layout(embeddings, tmp), path)
+    _, _, probes = _probe_cells(spark, embeddings, path, query_vec_id, nprobe)
     packed = spark.read.parquet(path).filter(
         F.col("assigned_label").isin(probes)
         & (F.col("vec_id") != query_vec_id)
     )
-    codes = packed.select(
-        "vec_id", F.posexplode("codes").alias("s", "code")
-    ).withColumn("s", F.col("s").cast("long"))
-    cb = spark.read.parquet(os.path.join(path, "_codebook"))
-    qsub = _pq_subvectors(
-        embeddings.filter(F.col("vec_id") == query_vec_id)
-    ).select("s", F.col("subvec").alias("qvec"))
-    lut = cb.join(qsub, "s").select(
-        "s",
-        "code",
-        F.round(_dot(F.col("cvec"), F.col("qvec")), PQ_DIST_ROUND).alias(
-            "partial"
-        ),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("partial"), ROUND).alias("adc_sim"))
+    adc = _pq_adc(
+        _pq_decode(packed),
+        _read_codebook(spark, path),
+        embeddings.filter(F.col("vec_id") == query_vec_id),
+        "adc_sim",
     )
     short = (
         adc.orderBy(F.col("adc_sim").desc(), F.col("vec_id").asc())
@@ -3250,13 +3250,8 @@ def knn_join_ivfpq(
     amortized across the query batch, which is the economics that make
     a standing workload affordable: queries probing overlapping cells
     share one scan."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _build_layout_atomic(
-            lambda tmp: write_ivfpq_layout(embeddings, tmp), path
-        )
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
+    _build_layout_atomic(lambda tmp: write_ivfpq_layout(embeddings, tmp), path)
+    cents = _read_centroids(spark, path)
     qvecs = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         _as_double("embedding").alias("qvec"),
@@ -3286,29 +3281,14 @@ def knn_join_ivfpq(
     packed = spark.read.parquet(path).filter(
         F.col("assigned_label").isin(labels)
     )
-    codes = packed.select(
-        "vec_id", "assigned_label", F.posexplode("codes").alias("s", "code")
-    ).withColumn("s", F.col("s").cast("long"))
-    cb = spark.read.parquet(os.path.join(path, "_codebook"))
-    qsub = _pq_subvectors(
-        embeddings.filter(F.col("vec_id") < n_queries)
-    ).select(
-        F.col("vec_id").alias("query_id"), "s", F.col("subvec").alias("qvec")
-    )
-    lut = cb.join(qsub, "s").select(
-        "query_id",
-        "s",
-        "code",
-        F.round(_dot(F.col("cvec"), F.col("qvec")), PQ_DIST_ROUND).alias(
-            "partial"
-        ),
-    )
-    adc = (
-        codes.join(F.broadcast(probe), "assigned_label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "s", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("partial"), ROUND).alias("adc_sim"))
+    adc = _pq_adc(
+        _pq_decode(packed, "assigned_label")
+        .join(F.broadcast(probe), "assigned_label")
+        .filter(F.col("vec_id") != F.col("query_id")),
+        _read_codebook(spark, path),
+        embeddings.filter(F.col("vec_id") < n_queries),
+        "adc_sim",
+        by_query=True,
     )
     short_w = Window.partitionBy("query_id").orderBy(
         F.col("adc_sim").desc(), F.col("vec_id").asc()
@@ -3554,8 +3534,6 @@ def knn_join_ivfpq_after_delete(
 
     The build+update runs once per cache path under the atomic-rename
     discipline; repeat calls serve the committed layout."""
-    import os
-
     from music_streaming_etl_glue_spark.plans.snapshot_diff import (
         incremental_index_update,
     )
@@ -3569,8 +3547,7 @@ def knn_join_ivfpq_after_delete(
         write_ivfpq_layout(old, tmp)
         incremental_index_update(spark, old, new, tmp)
 
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _build_layout_atomic(build, path)
+    _build_layout_atomic(build, path)
     return knn_join_ivfpq(spark, new, path, n_queries, k, nprobe, shortlist)
 
 

@@ -24,9 +24,7 @@ so the same code runs narrow at sf0.1 and saturates the cluster long
 before production scale (any relation ≥ par×rows_per_task rows fans out
 fully). ``rows_per_task`` is a per-call-site constant reflecting the
 per-row cost of the stage the spread feeds (a codec lane amortizes a
-task's fixed cost over fewer rows than a slim projection does); the
-global ``SPARK_GRAFT_SPREAD_MULT`` env knob rescales every site at once
-for cluster tuning without a code change.
+task's fixed cost over fewer rows than a slim projection does).
 
 When the plan can't provide an estimate (LogicalRDD checkpoints, plans
 whose stats degrade to the unknown sentinel), the fallback is FULL
@@ -36,18 +34,12 @@ overhead, a wrong "narrow" serializes a production stage.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: default rows a spread task should own before another task is worth
 #: its fixed cost (task launch + Arrow stage setup is ~0.05-0.5 s; the
 #: kernels behind these spreads run ~µs-ms per row).
 DEFAULT_ROWS_PER_TASK = 2048
-
-#: global multiplier over every call site's rows_per_task (cluster
-#: tuning knob; >1 → narrower, <1 → wider).
-_SPREAD_MULT = float(os.environ.get("SPARK_GRAFT_SPREAD_MULT", "1"))
 
 #: Catalyst returns conf.defaultSizeInBytes (Long.MaxValue by default)
 #: when a leaf has no clue — treat anything absurdly large as unknown.
@@ -98,5 +90,5 @@ def spread_width(
     n = est_rows(df, row_bytes=row_bytes)
     if n is None:
         return par
-    rpt = max(1, int(rows_per_task * _SPREAD_MULT))
+    rpt = max(1, rows_per_task)
     return max(1, min(par, (n + rpt - 1) // rpt))

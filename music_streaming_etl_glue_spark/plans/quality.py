@@ -9,7 +9,7 @@ QA cost is a scan even at serving-table scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Required attributes per item family (reference item shapes,
@@ -27,44 +27,59 @@ REQUIRED_ATTRS = {
 }
 
 _TS_RE = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}$"
+_ID_RE = r"^[A-Z_]+_"
+
+#: metrics that must never be negative, whichever family carries them
+_NON_NEGATIVE_METRICS = (
+    "total_songs_played",
+    "total_listening_time_minutes",
+    "listen_count",
+    "unique_listeners",
+    "play_count",
+    "plays_last_24h",
+    "rank",
+)
+
+
+def _missing_attr_expr() -> Column:
+    """Per-family missing-required-attribute predicate."""
+    missing_attr = F.lit(False)
+    for family, attrs in REQUIRED_ATTRS.items():
+        fam_missing = F.lit(False)
+        for a in attrs:
+            fam_missing = fam_missing | F.col(a).isNull()
+        missing_attr = F.when(
+            F.col("kpi_type") == family, fam_missing
+        ).otherwise(missing_attr)
+    return missing_attr
+
+
+def _qa_counters() -> list[Column]:
+    """The QA counters as named aggregate columns, shared by the
+    standalone auditor (``.agg``) and the write-time metrics
+    (``.observe``). rlike(NULL) is NULL and sum() skips NULLs, so the
+    timestamp/id checks coalesce to True: a NULL counts as malformed
+    instead of failing open."""
+    negative = F.lit(False)
+    for m in _NON_NEGATIVE_METRICS:
+        negative = negative | (F.col(m) < 0)
+    flags = {
+        "missing_attrs": _missing_attr_expr(),
+        "negative_metrics": F.coalesce(negative, F.lit(False)),
+        "malformed_timestamps": F.coalesce(
+            ~F.col("timestamp").rlike(_TS_RE), F.lit(True)
+        ),
+        "malformed_ids": F.coalesce(~F.col("id").rlike(_ID_RE), F.lit(True)),
+    }
+    return [F.count(F.lit(1)).alias("n_items")] + [
+        F.sum(flag.cast("long")).alias(name) for name, flag in flags.items()
+    ]
 
 
 def qa_serving_items(items: DataFrame) -> DataFrame:
     """One row per kpi_type with violation counts: missing required
     attributes, negative metrics, malformed item ids / timestamps."""
-    missing_attr = _missing_attr_expr()
-
-    negative_metric = F.lit(False)
-    for m in (
-        "total_songs_played",
-        "total_listening_time_minutes",
-        "listen_count",
-        "unique_listeners",
-        "play_count",
-        "plays_last_24h",
-        "rank",
-    ):
-        negative_metric = negative_metric | (F.col(m) < 0)
-
-    # rlike(NULL) is NULL and sum() skips NULLs — coalesce to True so a
-    # NULL timestamp/id counts as malformed instead of failing open
-    bad_ts = F.coalesce(~F.col("timestamp").rlike(_TS_RE), F.lit(True))
-    bad_id = F.coalesce(~F.col("id").rlike(r"^[A-Z_]+_"), F.lit(True))
-
-    return (
-        items.withColumn("v_missing", missing_attr.cast("int"))
-        .withColumn("v_negative", F.coalesce(negative_metric, F.lit(False)).cast("int"))
-        .withColumn("v_bad_ts", bad_ts.cast("int"))
-        .withColumn("v_bad_id", bad_id.cast("int"))
-        .groupBy("kpi_type")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum("v_missing").alias("missing_attrs"),
-            F.sum("v_negative").alias("negative_metrics"),
-            F.sum("v_bad_ts").alias("malformed_timestamps"),
-            F.sum("v_bad_id").alias("malformed_ids"),
-        )
-    )
+    return items.groupBy("kpi_type").agg(*_qa_counters())
 
 
 def assert_serving_quality(items: DataFrame) -> None:
@@ -83,20 +98,6 @@ def assert_serving_quality(items: DataFrame) -> None:
         raise ValueError(f"serving quality violations: {[r.asDict() for r in bad]}")
 
 
-def _missing_attr_expr():
-    """Per-family missing-required-attribute predicate (shared by the
-    standalone auditor and the observe()-based write-time metrics)."""
-    missing_attr = F.lit(False)
-    for family, attrs in REQUIRED_ATTRS.items():
-        fam_missing = F.lit(False)
-        for a in attrs:
-            fam_missing = fam_missing | F.col(a).isNull()
-        missing_attr = F.when(
-            F.col("kpi_type") == family, fam_missing
-        ).otherwise(missing_attr)
-    return missing_attr
-
-
 def observed_write_metrics(items: DataFrame) -> tuple[DataFrame, "Observation"]:
     """Attach free-riding QA metrics to the serving frame via
     ``DataFrame.observe``: the counters are collected DURING whatever
@@ -105,45 +106,16 @@ def observed_write_metrics(items: DataFrame) -> tuple[DataFrame, "Observation"]:
     which is its own scan. Use this form inside the batch pipeline; keep
     the standalone auditor for ad-hoc checks of already-written tables.
 
-    Same counter semantics as the auditor: NULL timestamps/ids count as
-    malformed (rlike(NULL) fails open without the coalesce), and the
-    missing-required-attribute check is included.
+    The counters are the auditor's own (:func:`_qa_counters`), summed
+    over all kpi types.
 
     Returns (frame_to_write, observation); read ``observation.get`` after
     the action completes.
     """
     from pyspark.sql import Observation
 
-    negative_metric = F.lit(False)
-    for m in (
-        "total_songs_played",
-        "total_listening_time_minutes",
-        "listen_count",
-        "unique_listeners",
-        "play_count",
-        "plays_last_24h",
-        "rank",
-    ):
-        negative_metric = negative_metric | (F.col(m) < 0)
-
     obs = Observation("serving_qa")
-    observed = items.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(_missing_attr_expr().cast("long")).alias("missing_attrs"),
-        F.sum(
-            F.coalesce(negative_metric, F.lit(False)).cast("long")
-        ).alias("negative_metrics"),
-        F.sum(
-            F.coalesce(~F.col("timestamp").rlike(_TS_RE), F.lit(True))
-            .cast("long")
-        ).alias("malformed_timestamps"),
-        F.sum(
-            F.coalesce(~F.col("id").rlike(r"^[A-Z_]+_"), F.lit(True))
-            .cast("long")
-        ).alias("malformed_ids"),
-    )
-    return observed, obs
+    return items.observe(obs, *_qa_counters()), obs
 
 
 # ---------------------------------------------------------------------------

@@ -1273,12 +1273,13 @@ def _ann_ingest_batch_handler(
     import os
 
     from music_streaming_etl_glue_spark.operators.similarity import (
-        _assign_to_centroids,
         _build_layout_atomic,
         _centroid_arrays,
-        _pq_assign,
+        _ivfpq_encode,
         _pq_codebook,
-        _pq_subvectors,
+        _read_centroids,
+        _read_codebook,
+        _write_artifacts,
         label_centroids,
         pq_reconstruction_error,
     )
@@ -1290,8 +1291,7 @@ def _ann_ingest_batch_handler(
         def build(tmp: str) -> None:
             cents = _centroid_arrays(label_centroids(batch)).localCheckpoint()
             cb = _pq_codebook(batch).localCheckpoint()
-            cents.write.parquet(os.path.join(tmp, "_centroids"))
-            cb.write.parquet(os.path.join(tmp, "_codebook"))
+            _write_artifacts(tmp, centroids=cents, codebook=cb)
             # root marker: partition discovery ignores underscore paths,
             # and _build_layout_atomic's once-only check needs it at root
             with open(os.path.join(tmp, "_SUCCESS"), "w"):
@@ -1307,27 +1307,13 @@ def _ann_ingest_batch_handler(
         )
         # 2. first batch pins the artifacts (atomic, race/replay-safe)
         _pin_artifacts(batch)
-        cents = spark.read.parquet(os.path.join(index_dir, "_centroids"))
-        cb = spark.read.parquet(os.path.join(index_dir, "_codebook"))
-        # 3. encode THIS batch under the pinned artifacts
-        assign = _assign_to_centroids(batch, cents).select(
-            "vec_id", "assigned_label"
-        )
-        packed = (
-            _pq_assign(_pq_subvectors(batch), cb)
-            .groupBy("vec_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("s", "code"))),
-                    lambda t: t["code"],
-                ).alias("codes")
-            )
-        )
-        # 4. land codes: dynamic overwrite of exactly this epoch's
+        cb = _read_codebook(spark, index_dir)
+        # 3. encode THIS batch under the pinned artifacts, then 4. land
+        # codes: dynamic overwrite of exactly this epoch's
         # (assigned_label, epoch) partitions — replay rewrites, never
         # double-appends; other epochs' files are never listed
         (
-            packed.join(assign, "vec_id")
+            _ivfpq_encode(batch, _read_centroids(spark, index_dir), cb)
             .withColumn("epoch", F.lit(epoch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

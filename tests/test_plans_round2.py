@@ -187,6 +187,31 @@ def test_pq_adc_scans_codes_only(spark, tmp_path):
     assert "CartesianProduct" not in plan
 
 
+def test_ivfpq_similar_items_prunes_cells_and_scans_codes(spark, tmp_path):
+    """The IVF-PQ funnel behind similar-item reads: the index scan is
+    pruned to the probed ``assigned_label=`` cells and reads the packed
+    code column, the ADC lookup table joins by broadcast on (s, code),
+    and no join degrades to a nested loop."""
+    import re
+
+    from music_streaming_etl_glue_spark.operators.similarity import (
+        ann_topk_ivfpq,
+    )
+
+    embs = load_table(spark, SF_SMOKE, "embeddings")
+    plan = _plan(ann_topk_ivfpq(spark, embs, str(tmp_path / "ivfpq")))
+    scans = [
+        line for line in plan.splitlines() if "PartitionFilters:" in line
+    ]
+    assert any(
+        re.search(r"PartitionFilters: \[[^\]]*assigned_label", line)
+        and "codes:array<bigint>" in line
+        for line in scans
+    ), scans
+    assert re.search(r"BroadcastHashJoin \[s#\d+L?, code#\d+L?\]", plan)
+    assert "CartesianProduct" not in plan
+
+
 def test_triangle_census_no_cartesian(spark):
     from music_streaming_etl_glue_spark.operators.clusters import (
         triangle_stats,

@@ -72,6 +72,22 @@ def test_winnow_arrow_matches_jvm_minima(spark):
     assert 4 not in per_doc and 6 not in per_doc and 7 not in per_doc
 
 
+def test_winnow_skips_null_doc_id(spark):
+    """A NULL doc_id row yields no fingerprints and does not fail the
+    Arrow kernel: the frame's fingerprints equal those of its non-null
+    rows alone."""
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (None, "a document that lost its id somewhere upstream"),
+        (3, "elevenchars"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    non_null = docs.filter(F.col("doc_id").isNotNull())
+    got = _rowset(dd.winnowing_fingerprints(docs))
+    assert got == _rowset(dd.winnowing_fingerprints(non_null))
+    assert {r[0] for r in got} == {1, 3}
+
+
 def test_winnow_plan_uses_arrow_not_pickled_rows(spark):
     docs = spark.createDataFrame(
         [(1, "the quick brown fox")], "doc_id long, text string"

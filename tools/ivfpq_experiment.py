@@ -32,8 +32,6 @@ def main() -> None:
         with tempfile.TemporaryDirectory() as d:
             path = d + "/idx"
             sim.write_ivfpq_layout(embs, path)
-            import pyspark.sql.functions as F
-
             cells = (
                 spark.read.parquet(path)
                 .groupBy("assigned_label")
@@ -50,29 +48,10 @@ def main() -> None:
                 }
                 rec = len(set(exact) & got) / len(exact)
                 # read fraction = rows in the nprobe probed cells / n —
-                # recompute the probe list the operator derives
-                import numpy as np
-
-                qrow = (
-                    embs.filter(F.col("vec_id") == sim.QUERY_VEC_ID)
-                    .select("embedding")
-                    .head()
+                # the probe list the operator derives
+                _, _, probes = sim._probe_cells(
+                    spark, embs, path, sim.QUERY_VEC_ID, nprobe
                 )
-                qv = np.asarray(qrow[0], dtype=np.float64)
-                cents = spark.read.parquet(path + "/_centroids")
-                qlit = F.array(*[F.lit(float(x)) for x in qv])
-                c = F.col("cvec")
-                dist = F.round(
-                    F.lit(float(qv @ qv)) - 2 * sim._dot(qlit, c) + sim._dot(c, c),
-                    sim.ROUND,
-                )
-                probes = [
-                    r["assigned_label"]
-                    for r in cents.select("assigned_label", dist.alias("d"))
-                    .orderBy("d", "assigned_label")
-                    .limit(nprobe)
-                    .collect()
-                ]
                 frac = sum(sizes.get(p, 0) for p in probes) / n
                 print(
                     f"  nprobe={nprobe}: recall@20={rec:.2f} "
