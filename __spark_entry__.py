@@ -51,7 +51,7 @@ def _ivf_cache_path(
     still miss) plus the layout config (a parameter change must
     invalidate). uid-scoped so another user's /tmp entry can neither
     collide with nor poison this one; builds themselves are
-    atomic-rename (see similarity._build_layout_atomic)."""
+    atomic-rename (see plans.layout._build_layout_atomic)."""
     import hashlib
     import os
     import tempfile
@@ -638,8 +638,6 @@ def _zipf_docs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     time the JOIN strategies, not the one-time corpus synthesis — the
     same convention as the ANN entries, whose index builds happen at
     load time."""
-    import os
-
     path = _ivf_cache_path(
         sf_dir,
         "zipfdocs",
@@ -648,12 +646,11 @@ def _zipf_docs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"e{_dedup.ZIPF_EDIT_MOD}.{_dedup.ZIPF_EDIT_RES}",
         table="documents",
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _sim._build_layout_atomic(
-            lambda tmp: _dedup.zipf_documents(_docs(spark, sf_dir))
-            .write.parquet(tmp),
-            path,
-        )
+    _sim._build_layout_atomic(
+        lambda tmp: _dedup.zipf_documents(_docs(spark, sf_dir))
+        .write.parquet(tmp),
+        path,
+    )
     return spark.read.parquet(path)
 
 

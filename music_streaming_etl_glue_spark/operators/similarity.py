@@ -45,6 +45,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from music_streaming_etl_glue_spark.functions.ranks import rank_post_limit
+from music_streaming_etl_glue_spark.plans.layout import (
+    _build_layout_atomic,
+    _heal_dir,
+    _swap_dir,
+)
 
 TOP_K = 20
 QUERY_VEC_ID = 0
@@ -485,12 +490,9 @@ def ann_topk_ivf(
     sign(normalized dim) == sign(raw dim), so this matches the stored
     bucketing. Builds the layout on first use if ``ivf_path`` is absent.
     """
-    import os
-
-    if not os.path.exists(os.path.join(ivf_path, "_SUCCESS")):
-        _build_layout_atomic(
-            lambda tmp: write_ivf_layout(embeddings, tmp, bits), ivf_path
-        )
+    _build_layout_atomic(
+        lambda tmp: write_ivf_layout(embeddings, tmp, bits), ivf_path
+    )
 
     qrow = (
         embeddings.filter(F.col("vec_id") == query_vec_id)
@@ -516,26 +518,6 @@ def ann_topk_ivf(
         F.round(_dot(F.col("vec"), qlit), ROUND).alias("similarity"),
     )
     return _ranked_topk(scored, k)
-
-
-def _build_layout_atomic(build_fn, path: str) -> None:
-    """Build an on-disk index layout exactly once, concurrency-safe:
-    write into a unique temp dir, then atomically rename into place. If
-    another process won the race (rename target exists), its committed
-    layout is used and ours is discarded — no process ever reads a
-    half-written index (round-2 ADVICE item)."""
-    import os
-    import shutil
-    import uuid
-
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return
-    tmp = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    build_fn(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 #: cells to probe in the learned-centroid IVF (of ~10 k-means cells in
@@ -2121,18 +2103,27 @@ def _write_artifacts(
             df.write.mode("overwrite").parquet(os.path.join(path, name))
 
 
-def _read_centroids(spark, path: str) -> DataFrame:
-    """The layout's pinned (assigned_label, cvec) centroids."""
+def _read_artifact(spark, path: str, name: str) -> DataFrame:
+    """Read one pinned artifact from its part files. Spark treats an
+    underscore-named ROOT dir as hidden and warns that all paths were
+    ignored before reading it anyway; a glob path instead makes it probe
+    the pattern as a streaming-sink dir and warn with a stack trace."""
+    import glob
     import os
 
-    return spark.read.parquet(os.path.join(path, "_centroids"))
+    return spark.read.parquet(
+        *sorted(glob.glob(os.path.join(path, name, "*.parquet")))
+    )
+
+
+def _read_centroids(spark, path: str) -> DataFrame:
+    """The layout's pinned (assigned_label, cvec) centroids."""
+    return _read_artifact(spark, path, "_centroids")
 
 
 def _read_codebook(spark, path: str) -> DataFrame:
     """The layout's pinned (s, code, cvec) PQ codebook."""
-    import os
-
-    return spark.read.parquet(os.path.join(path, "_codebook"))
+    return _read_artifact(spark, path, "_codebook")
 
 
 def _probe_cells(
@@ -2685,31 +2676,21 @@ def refresh_ivfpq_layout(spark, appended: DataFrame, path: str) -> None:
 
 
 def _heal_parked_cells(path: str) -> None:
-    """Restore/clear ``.old-*`` parked cell copies left by a hard crash
-    during :func:`rewrite_ivfpq_cells`' swap (ADVICE r9). A parked name
-    is ``.old-{label}-{time_ns}``: if the label's live dir is missing
-    the crash hit between the two renames — restore the newest parked
-    copy; if the live dir exists the crash hit after the swap — the
-    parked copy is superseded debris, drop it."""
+    """Heal every cell whose :func:`_swap_cells` a hard crash
+    interrupted: :func:`_heal_dir` per label over its parked
+    ``.old-{label}-{time_ns}`` copies."""
     import glob
     import os
-    import shutil
 
-    parked = sorted(glob.glob(os.path.join(path, ".old-*")))
     by_label: dict[str, list[str]] = {}
-    for p in parked:
+    # name-sorted: the time_ns suffix makes each label's last copy newest
+    # (legacy uuid-suffixed debris sorts arbitrarily but any parked
+    # copy is a complete pre-rewrite cell, so restoring it is safe)
+    for p in sorted(glob.glob(os.path.join(path, ".old-*"))):
         lab = os.path.basename(p)[len(".old-"):].rsplit("-", 1)[0]
         by_label.setdefault(lab, []).append(p)
     for lab, copies in by_label.items():
-        dst = os.path.join(path, f"assigned_label={lab}")
-        # name-sorted: the time_ns suffix makes the last entry newest
-        # (legacy uuid-suffixed debris sorts arbitrarily but any parked
-        # copy is a complete pre-rewrite cell, so restoring it is safe)
-        if not os.path.exists(dst):
-            os.rename(copies[-1], dst)
-            copies = copies[:-1]
-        for stale in copies:
-            shutil.rmtree(stale, ignore_errors=True)
+        _heal_dir(os.path.join(path, f"assigned_label={lab}"), copies)
 
 
 def rewrite_ivfpq_cells(spark, path: str, drop_ids: DataFrame) -> list:
@@ -2733,14 +2714,7 @@ def rewrite_ivfpq_cells(spark, path: str, drop_ids: DataFrame) -> list:
     import os
     import time
 
-    # self-heal a previous HARD crash mid-swap (ADVICE r9: process
-    # killed between rename(dst→old) and rename(src→dst) left the cell
-    # missing from the live layout with only the soft-exception restore
-    # to fix it): on entry, restore any parked `.old-*` cell whose live
-    # `assigned_label=` dir is missing, and clear parked debris whose
-    # live dir exists (crash after the swap, before the rmtree). Parked
-    # names are `.old-{label}-{time_ns}` — monotonic, so the newest
-    # parked copy per label wins if a double crash ever stacks two.
+    # self-heal a previous HARD crash mid-swap before reading the layout
     _heal_parked_cells(path)
 
     layout = spark.read.parquet(path)
@@ -2771,39 +2745,22 @@ def rewrite_ivfpq_cells(spark, path: str, drop_ids: DataFrame) -> list:
 
 
 def _swap_cells(path: str, tmp: str, touched: list) -> None:
-    """Swap-aside per cell (ADVICE r8, medium — the plans/layout.py
-    pattern): park the live cell at ``.old-*``, rename the rewrite in,
-    THEN drop the parked copy. The old rmtree(dst)+rename(src) order
-    had a window where a crash between the two permanently deleted the
-    cell's rows while the layout's _SUCCESS still validated the cache
-    — serves would silently miss vectors. With swap-aside the live
-    path always holds a complete cell: on failure the parked copy is
-    restored before the error propagates; a HARD crash heals on the
-    next :func:`_heal_parked_cells`."""
+    """:func:`_swap_dir` each touched cell of the rewrite at ``tmp``
+    into the layout at ``path`` (a cell the rewrite emptied disappears),
+    then drop ``tmp``. A HARD crash heals on the next
+    :func:`_heal_parked_cells`."""
     import os
     import shutil
     import time
 
     for lab in touched:
-        dst = os.path.join(path, f"assigned_label={lab}")
-        src = os.path.join(tmp, f"assigned_label={lab}")
         # dot-prefixed so partition discovery never sees the parked
         # copy; time_ns suffix so "newest parked" is name-sortable
-        old = os.path.join(
-            path, f".old-{lab}-{time.time_ns()}"
+        _swap_dir(
+            os.path.join(path, f"assigned_label={lab}"),
+            os.path.join(tmp, f"assigned_label={lab}"),
+            os.path.join(path, f".old-{lab}-{time.time_ns()}"),
         )
-        parked = os.path.exists(dst)
-        if parked:
-            os.rename(dst, old)
-        try:
-            if os.path.exists(src):
-                os.rename(src, dst)
-        except BaseException:
-            if parked:
-                os.rename(old, dst)  # put the cell back, then propagate
-            raise
-        if parked:
-            shutil.rmtree(old, ignore_errors=True)
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -2863,6 +2820,56 @@ def compact_ivfpq_epochs(spark, path: str, through_epoch=None) -> list:
     return touched
 
 
+def _retrain_candidate(
+    spark,
+    embeddings: DataFrame,
+    live: str,
+    candidate: str,
+    max_mean_sq_err: float,
+    min_recall: float,
+    n_queries: int,
+    k: int,
+    **extra,
+) -> tuple[dict, bool]:
+    """The drift gate and recall audit both retrain forms share: measure
+    the corpus' mean reconstruction error under the codebook pinned in
+    ``live``; past ``max_mean_sq_err``, train a fresh layout at
+    ``candidate`` and audit it against exact kNN, deleting it when mean
+    recall@k is below ``min_recall``. Returns (audit dict, whether
+    ``candidate`` holds a layout that passed); the caller owns the
+    cutover. ``extra`` entries seed the audit dict."""
+    import shutil
+
+    mean_err = float(
+        pq_reconstruction_error(
+            embeddings, codebook=_read_codebook(spark, live)
+        )
+        .agg(F.avg("sq_err"))
+        .head()[0]
+    )
+    audit: dict = {
+        "mean_sq_err": round(mean_err, ROUND),
+        "threshold": max_mean_sq_err,
+        "retrained": False,
+        "cutover": False,
+        **extra,
+    }
+    if mean_err <= max_mean_sq_err:
+        return audit, False
+    write_ivfpq_layout(embeddings, candidate)
+    audit["retrained"] = True
+    recall = knn_ivfpq_recall_audit(
+        spark, embeddings, candidate, n_queries, k
+    )
+    mean_recall = float(recall.agg(F.avg("recall_at_k")).head()[0])
+    audit["candidate_mean_recall"] = round(mean_recall, ROUND)
+    if mean_recall < min_recall:
+        shutil.rmtree(candidate, ignore_errors=True)
+        audit["reason"] = "recall_audit_failed"
+        return audit, False
+    return audit, True
+
+
 def retrain_ivfpq_layout(
     spark,
     embeddings: DataFrame,
@@ -2897,66 +2904,24 @@ def retrain_ivfpq_layout(
     travel + vacuum of old layouts come with it."""
     import glob
     import os
-    import shutil
     import time
 
-    # self-heal a previous HARD crash mid-cutover (process killed
-    # between rename(path→parked) and rename(candidate→path): no live
-    # index, old layout parked) — restore the newest parked copy before
-    # doing anything else, mirroring plans/layout.py's compaction heal.
-    # Parked names carry a monotonic time_ns suffix (ADVICE r9: the old
-    # random-uuid suffix made sorted()[-1] arbitrary), with an mtime
-    # tie-break so legacy uuid-suffixed debris still resolves newest.
-    parked_old = glob.glob(f"{path}.pre-retrain-*")
-    if not os.path.exists(path):
-        if parked_old:
-            newest = max(parked_old, key=os.path.getmtime)
-            os.rename(newest, path)
-            parked_old.remove(newest)
-    # a crash AFTER cutover but before rmtree(parked) leaves stale
-    # .pre-retrain-* debris (ADVICE r9: previously never cleaned — a
-    # later mid-cutover crash could restore a stale layout); the live
-    # path exists here either way, so everything still parked is debris
-    for leftover in parked_old:
-        shutil.rmtree(leftover, ignore_errors=True)
-    for leftover in glob.glob(f"{path}.retrain-*"):
-        shutil.rmtree(leftover, ignore_errors=True)  # pre-cutover debris
-
-    cb = _read_codebook(spark, path)
-    mean_err = float(
-        pq_reconstruction_error(embeddings, codebook=cb)
-        .agg(F.avg("sq_err"))
-        .head()[0]
+    # self-heal a previous HARD crash mid-cutover. Parked names carry a
+    # monotonic time_ns suffix; mtime order still resolves legacy
+    # uuid-suffixed copies newest-last. Leftover candidates are debris.
+    _heal_dir(
+        path,
+        sorted(glob.glob(f"{path}.pre-retrain-*"), key=os.path.getmtime),
+        debris=glob.glob(f"{path}.retrain-*"),
     )
-    audit: dict = {
-        "mean_sq_err": round(mean_err, ROUND),
-        "threshold": max_mean_sq_err,
-        "retrained": False,
-        "cutover": False,
-    }
-    if mean_err <= max_mean_sq_err:
-        return audit
     candidate = f"{path}.retrain-{os.getpid()}-{time.time_ns()}"
-    write_ivfpq_layout(embeddings, candidate)
-    audit["retrained"] = True
-    recall = knn_ivfpq_recall_audit(
-        spark, embeddings, candidate, n_queries, k
+    audit, passed = _retrain_candidate(
+        spark, embeddings, path, candidate,
+        max_mean_sq_err, min_recall, n_queries, k,
     )
-    mean_recall = float(recall.agg(F.avg("recall_at_k")).head()[0])
-    audit["candidate_mean_recall"] = round(mean_recall, ROUND)
-    if mean_recall < min_recall:
-        shutil.rmtree(candidate, ignore_errors=True)
-        audit["reason"] = "recall_audit_failed"
-        return audit
-    parked = f"{path}.pre-retrain-{time.time_ns()}"
-    os.rename(path, parked)
-    try:
-        os.rename(candidate, path)
-    except BaseException:
-        os.rename(parked, path)  # put the old index back, then raise
-        raise
-    shutil.rmtree(parked, ignore_errors=True)
-    audit["cutover"] = True
+    if passed:
+        _swap_dir(path, candidate, f"{path}.pre-retrain-{time.time_ns()}")
+        audit["cutover"] = True
     return audit
 
 
@@ -3030,40 +2995,19 @@ def retrain_ivfpq_lake(
     :func:`vacuum_ivfpq_layouts` sweeps. Readers pinned on a prior
     registry version keep serving their layout until vacuum."""
     import os
-    import shutil
     import time
 
     from music_streaming_etl_glue_spark.plans import lakehouse
 
-    live = current_ivfpq_layout(spark, registry_dir)
-    cb = _read_codebook(spark, live)
-    mean_err = float(
-        pq_reconstruction_error(embeddings, codebook=cb)
-        .agg(F.avg("sq_err"))
-        .head()[0]
-    )
-    audit: dict = {
-        "mean_sq_err": round(mean_err, ROUND),
-        "threshold": max_mean_sq_err,
-        "retrained": False,
-        "cutover": False,
-        "registry_version": lakehouse.current_version(registry_dir),
-    }
-    if mean_err <= max_mean_sq_err:
-        return audit
     candidate = os.path.join(
         layouts_root, f"ivfpq-{time.time_ns():x}-{os.getpid():x}"
     )
-    write_ivfpq_layout(embeddings, candidate)
-    audit["retrained"] = True
-    recall = knn_ivfpq_recall_audit(
-        spark, embeddings, candidate, n_queries, k
+    audit, passed = _retrain_candidate(
+        spark, embeddings, current_ivfpq_layout(spark, registry_dir),
+        candidate, max_mean_sq_err, min_recall, n_queries, k,
+        registry_version=lakehouse.current_version(registry_dir),
     )
-    mean_recall = float(recall.agg(F.avg("recall_at_k")).head()[0])
-    audit["candidate_mean_recall"] = round(mean_recall, ROUND)
-    if mean_recall < min_recall:
-        shutil.rmtree(candidate, ignore_errors=True)
-        audit["reason"] = "recall_audit_failed"
+    if not passed:
         return audit
     pointer = spark.createDataFrame(
         [(candidate, time.time_ns())],

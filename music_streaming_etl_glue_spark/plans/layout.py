@@ -5,9 +5,19 @@ skewed keys.
 The reference never manages layout (flat unpartitioned writes,
 ``validate_data.py:316-318``); at cluster scale join/agg shuffle placement
 is the dominant cost, so the engine makes both first-class.
+
+It also holds the one crash-safe directory-replacement protocol every
+on-disk index, state dir and compacted table uses:
+``_build_layout_atomic`` publishes a dir once, ``_swap_dir`` replaces a
+live dir by park + rename-in, and ``_heal_dir`` repairs what a hard
+crash between those renames left behind.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import uuid
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -180,44 +190,87 @@ WHERE hot_rank <= {SKEW_TOP_N}
 """
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_files: int,
-    tmp_suffix: str = "__compact_tmp",
-) -> int:
+# ---------------------------------------------------------------------------
+# crash-safe directory publish / swap / heal (module docstring)
+# ---------------------------------------------------------------------------
+
+
+def _build_layout_atomic(build_fn, path: str) -> None:
+    """Build an on-disk layout exactly once, concurrency-safe: write
+    into a unique temp dir, then atomically rename into place. If
+    another process won the race (rename target exists), its committed
+    layout is used and ours is discarded — no process ever reads a
+    half-written layout."""
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return
+    tmp = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    build_fn(tmp)
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _swap_dir(live: str, new: str, parked: str) -> None:
+    """Replace the dir ``live`` with ``new``: park ``live`` at
+    ``parked``, rename ``new`` in, then drop the parked copy. A missing
+    ``live`` is not parked; a missing ``new`` leaves ``live`` absent (a
+    rewrite that emptied it). If the rename-in raises, the parked copy
+    is renamed back before the error propagates. POSIX has no atomic
+    directory exchange, so a hard crash between the two renames leaves
+    ``live`` missing: the caller runs :func:`_heal_dir` before its next
+    read, and ``parked`` must be a name that heal finds."""
+    was_live = os.path.exists(live)
+    if was_live:
+        os.rename(live, parked)
+    try:
+        if os.path.exists(new):
+            os.rename(new, live)
+    except BaseException:
+        if was_live:
+            os.rename(parked, live)
+        raise
+    if was_live:
+        shutil.rmtree(parked, ignore_errors=True)
+
+
+def _heal_dir(live: str, parked, debris=()) -> None:
+    """Repair a :func:`_swap_dir` that a hard crash interrupted.
+    ``parked`` lists the parked copies of ``live``, oldest first. If
+    ``live`` is missing the crash hit between the two renames, so the
+    newest parked copy is restored; if ``live`` exists the crash hit
+    after the swap. Either way every other parked copy is superseded and
+    removed, and so is every ``debris`` path (an unfinished build)."""
+    parked = list(parked)
+    if parked and not os.path.exists(live):
+        os.rename(parked.pop(), live)
+    for stale in (*parked, *debris):
+        shutil.rmtree(stale, ignore_errors=True)
+
+
+def compact_parquet(spark, path: str, target_files: int) -> int:
     """Small-files compaction: rewrite a parquet directory into
     ``target_files`` files (the maintenance job every streaming/append
     sink eventually needs — thousands of per-epoch files turn scan
     planning and open() overhead into the bottleneck long before data
     volume does).
 
-    Rewrites into a sibling temp dir, verifies the row count, then swaps
-    via two renames. POSIX has no atomic directory exchange, so readers
-    racing the swap can see a missing path for the instant between the
-    renames — run compaction in the table's maintenance window, or use
-    ``plans.lakehouse`` (this engine's snapshot-committed table format,
-    same design as Delta/Iceberg) when readers are truly concurrent:
-    its ``compact`` commits the rewrite as a new snapshot and never
-    mutates a file a reader can resolve. Crash recovery is self-healing: stale
-    ``__compact_old`` / tmp dirs from an interrupted run are restored or
-    removed on the next invocation. ``coalesce`` (not ``repartition``)
-    avoids a shuffle — file boundaries just merge. Returns the verified
-    row count.
+    Rewrites into the sibling ``__compact_tmp`` dir, verifies the row
+    count, then swaps it in with :func:`_swap_dir` (the table parks at
+    ``__compact_old``). Readers racing the swap can see a missing path
+    for the instant between the renames — run compaction in the table's
+    maintenance window, or use ``plans.lakehouse`` (this engine's
+    snapshot-committed table format, same design as Delta/Iceberg) when
+    readers are truly concurrent: its ``compact`` commits the rewrite as
+    a new snapshot and never mutates a file a reader can resolve. Crash
+    recovery is self-healing: a parked table or stale tmp dir from an
+    interrupted run is restored or removed on the next invocation.
+    ``coalesce`` (not ``repartition``) avoids a shuffle — file
+    boundaries just merge. Returns the verified row count.
     """
-    import os
-    import shutil
-
     old = path.rstrip("/") + "__compact_old"
-    tmp = path.rstrip("/") + tmp_suffix
-    # self-heal a previous crash: mid-swap (table parked at `old`) →
-    # restore; pre-swap leftovers → discard
-    if os.path.exists(old):
-        if not os.path.exists(path):
-            os.rename(old, path)
-        else:
-            shutil.rmtree(old)
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = path.rstrip("/") + "__compact_tmp"
+    _heal_dir(path, [old] if os.path.exists(old) else [], debris=[tmp])
 
     df = spark.read.parquet(path)
     n_before = df.count()
@@ -228,13 +281,7 @@ def compact_parquet(
         raise RuntimeError(
             f"compaction row drift: {n_before} -> {n_after}; aborted"
         )
-    os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.rename(old, path)  # put the table back before propagating
-        raise
-    shutil.rmtree(old)
+    _swap_dir(path, tmp, old)
     return n_after
 
 

@@ -206,8 +206,6 @@ def incremental_index_update(
     Returns the diff audit plus ``encoded`` (vectors appended),
     ``dropped`` (old rows removed) and ``cells_rewritten``.
     """
-    import os
-
     from music_streaming_etl_glue_spark.operators.similarity import (
         _build_layout_atomic,
         refresh_ivfpq_layout,
@@ -215,10 +213,7 @@ def incremental_index_update(
         write_ivfpq_layout,
     )
 
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _build_layout_atomic(
-            lambda tmp: write_ivfpq_layout(old, tmp), path
-        )
+    _build_layout_atomic(lambda tmp: write_ivfpq_layout(old, tmp), path)
     d = dataset_diff(old, new, "vec_id", ["embedding"]).localCheckpoint(
         eager=False
     )

@@ -11,10 +11,19 @@ cadence as the reference's scheduled DAG, minus the bookkeeping code.
 
 from __future__ import annotations
 
+import glob
+import os
+import time
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from music_streaming_etl_glue_spark.plans.layout import (
+    _build_layout_atomic,
+    _heal_dir,
+    _swap_dir,
+)
 from music_streaming_etl_glue_spark.sources.catalog import convert_nanos_ts
 
 def _events_file_schema(ts_type: T.DataType) -> T.StructType:
@@ -335,6 +344,13 @@ def _bloom_dedup_batch_handler(
     epoch_writer = _idempotent_epoch_writer(output_dir)
 
     def dedup_and_land(batch_df: DataFrame, epoch_id: int) -> None:
+        # a hard crash mid-swap leaves the filter parked: restore it
+        # before the probe, or the replay admits every duplicate
+        _heal_dir(
+            bloom_path,
+            sorted(glob.glob(f"{bloom_path}.old-*")),
+            debris=glob.glob(f"{bloom_path}.epoch-*"),
+        )
         w = Window.partitionBy("text_hash").orderBy("doc_id")
         batch = (
             batch_df.drop("ingest_ts")
@@ -395,17 +411,11 @@ def _bloom_dedup_batch_handler(
             if bloom is not None
             else new_words
         )
-        # read-then-replace: write beside, rename into place (the next
+        # read-then-replace: write beside, swap into place (the next
         # epoch reads this path; a crash mid-write must not corrupt it)
         tmp = f"{bloom_path}.epoch-{epoch_id}"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = f"{bloom_path}.old-{epoch_id}"
-        if os.path.exists(bloom_path):
-            os.rename(bloom_path, old)
-        os.rename(tmp, bloom_path)
-        import shutil
-
-        shutil.rmtree(old, ignore_errors=True)
+        _swap_dir(bloom_path, tmp, f"{bloom_path}.old-{epoch_id}")
 
     return dedup_and_land
 
@@ -713,63 +723,32 @@ def ingest_video_deduplicated(
     q.awaitTermination()
 
 
-def _restore_or_clear_parked(live: str) -> None:
-    """Heal a park-rename swap that a hard crash interrupted: if the
-    live dir is missing, restore the newest ``.old-<name>-*`` sibling;
-    if the live dir exists, any parked sibling is superseded debris —
-    the rewrite_ivfpq_cells discipline applied to whole state dirs.
-    Also sweeps orphaned ``<live>.build-*`` temp dirs (a crash during
-    :func:`_swap_in_dir`'s build_fn leaves one behind), mirroring
-    retrain_ivfpq_layout's pre-cutover ``.retrain-*`` debris sweep."""
-    import glob
-    import os
-    import shutil
-
-    for orphan in glob.glob(f"{live}.build-*"):
-        shutil.rmtree(orphan, ignore_errors=True)
-    parked = sorted(
-        glob.glob(
-            os.path.join(
-                os.path.dirname(live),
-                f".old-{os.path.basename(live)}-*",
-            )
-        )
+def _parked_name(live: str, suffix: str) -> str:
+    """The dot-prefixed sibling a state dir parks at during a swap."""
+    return os.path.join(
+        os.path.dirname(live), f".old-{os.path.basename(live)}-{suffix}"
     )
-    if not parked:
-        return
-    if not os.path.exists(live):
-        os.rename(parked[-1], live)
-        parked = parked[:-1]
-    for stale in parked:
-        shutil.rmtree(stale, ignore_errors=True)
+
+
+def _restore_or_clear_parked(live: str) -> None:
+    """:func:`_heal_dir` for a state dir swapped by :func:`_swap_in_dir`:
+    its parked ``.old-<name>-<ns>`` siblings, newest last by name, and
+    any ``<live>.build-*`` temp dir a crash during build_fn left."""
+    _heal_dir(
+        live,
+        sorted(glob.glob(_parked_name(live, "*"))),
+        debris=glob.glob(f"{live}.build-*"),
+    )
 
 
 def _swap_in_dir(live: str, build_fn) -> None:
-    """Replace a state dir atomically: build into a temp sibling, park
-    the live dir at a dot-prefixed name, rename the build in, drop the
-    parked copy. A crash at any point heals on the next
+    """Replace a state dir: build into a temp sibling, then
+    :func:`_swap_dir` it in. A crash at any point heals on the next
     :func:`_restore_or_clear_parked`."""
-    import os
-    import shutil
-    import time
-
     ns = time.time_ns()
     tmp = f"{live}.build-{ns}"
     build_fn(tmp)
-    old = os.path.join(
-        os.path.dirname(live), f".old-{os.path.basename(live)}-{ns}"
-    )
-    parked = os.path.exists(live)
-    if parked:
-        os.rename(live, old)
-    try:
-        os.rename(tmp, live)
-    except BaseException:
-        if parked:
-            os.rename(old, live)
-        raise
-    if parked:
-        shutil.rmtree(old, ignore_errors=True)
+    _swap_dir(live, tmp, _parked_name(live, ns))
 
 
 def _semantic_dedup_batch_handler(
@@ -1266,14 +1245,13 @@ def _ann_ingest_batch_handler(
     (mean squared reconstruction error of the batch under the PINNED
     codebook) lands at ``state_dir/drift`` — when it trips a budget,
     the operator to run is the batch
-    :func:`..operators.similarity.retrain_ivfpq_layout`, whose
-    audit-gated atomic cutover is already crash-safe. Scale: per-epoch
+    :func:`..operators.similarity.retrain_ivfpq_lake`, whose
+    audit-gated cutover is one registry commit. Scale: per-epoch
     work is O(batch) encode (centroids ~cells rows, codebook M·K rows,
     both broadcast-sized); nothing rescans the landed corpus."""
     import os
 
     from music_streaming_etl_glue_spark.operators.similarity import (
-        _build_layout_atomic,
         _centroid_arrays,
         _ivfpq_encode,
         _pq_codebook,

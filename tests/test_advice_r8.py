@@ -86,6 +86,43 @@ def test_bloom_ingest_epoch_replay_keeps_landed_docs(spark, tmp_path):
     assert landed() == before, "epoch-0 replay lost landed documents"
 
 
+def test_bloom_ingest_heals_filter_parked_by_crash_mid_swap(spark, tmp_path):
+    """A hard crash between parking ``state/bloom`` and renaming the new
+    filter in leaves no live filter. The next epoch must restore the
+    parked one before probing: otherwise it admits a cross-epoch dup and
+    then deletes the parked filter, losing every earlier epoch's hashes."""
+    from music_streaming_etl_glue_spark.streaming.file_pipeline import (
+        _bloom_dedup_batch_handler,
+    )
+
+    out = str(tmp_path / "clean")
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    handler = _bloom_dedup_batch_handler(spark, out, state)
+    handler(
+        spark.createDataFrame(
+            _doc_rows([(0, "alpha beta gamma"), (1, "delta epsilon zeta")]),
+            DOC_COLS,
+        ),
+        0,
+    )
+    bloom = os.path.join(state, "bloom")
+    os.rename(bloom, bloom + ".old-1")  # the crash window of epoch 1
+
+    handler(
+        spark.createDataFrame(
+            _doc_rows([(10, "alpha beta gamma"), (11, "eta theta iota")]),
+            DOC_COLS,
+        ),
+        1,
+    )
+    landed = sorted(
+        r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
+    )
+    assert landed == [0, 1, 11], "cross-epoch dup landed after the crash"
+    assert os.listdir(state) == ["bloom"]
+
+
 def test_ivfpq_cell_swap_survives_crash_mid_swap(spark, tmp_path):
     """Force the rename-in of one touched cell to fail: the live cell
     directory must still be present and fully readable afterwards (the

@@ -146,6 +146,25 @@ def test_compact_parquet_merges_files_and_preserves_rows(spark, tmp_path):
     assert spark.read.parquet(path).count() == n
 
 
+def test_compact_parquet_heals_table_parked_by_crash(spark, tmp_path):
+    """A hard crash mid-swap leaves the table parked at
+    ``__compact_old`` and a stray ``__compact_tmp``: the next run must
+    restore the table, compact it, and leave neither dir behind."""
+    import os
+
+    from music_streaming_etl_glue_spark.plans.layout import compact_parquet
+
+    path = str(tmp_path / "frag")
+    ev = load_table(spark, SF_SMOKE, "events")
+    ev.repartition(7).write.parquet(path)
+    os.rename(path, path + "__compact_old")
+    os.makedirs(path + "__compact_tmp")
+
+    assert compact_parquet(spark, path, target_files=2) == ev.count()
+    assert spark.read.parquet(path).count() == ev.count()
+    assert sorted(os.listdir(tmp_path)) == ["frag"]
+
+
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     """Appended data with a NEW column must be readable as one table via
     mergeSchema, with old rows null in the new column — the additive

@@ -22,7 +22,9 @@ def items(spark):
         load_table(spark, SF_SMOKE, "customer"),
         load_table(spark, SF_SMOKE, "nation"),
     )
-    return serving_items(enriched).cache()
+    cached = serving_items(enriched).cache()
+    yield cached
+    cached.unpersist()
 
 
 def test_pipeline_output_is_clean(items):
